@@ -102,7 +102,7 @@ def touch_metrics(catalog: DataFrame, names: DataFrame, now: int) -> DataFrame:
     return _touch_column(catalog, names, now, "updated_on")
 
 
-def touch_read_on(catalog: DataFrame, names: DataFrame, now: int) -> DataFrame:
+def touch_read_on(catalog: DataFrame, names: list[str], now: int) -> DataFrame:
     """Refresh ``read_on`` for the given names — the fetch-path sibling of
     :func:`touch_metrics` (reference ``_update_metric_read_on``,
     drivers/cassandra.py:1921-1935: ``UPDATE metrics_metadata SET
@@ -111,10 +111,14 @@ def touch_read_on(catalog: DataFrame, names: DataFrame, now: int) -> DataFrame:
     clean-expired cutoff reads ``updated_on`` only
     (drivers/cassandra.py:3219-3224), and so does ours.  Catalogs built
     without the column gain it here (NULL for untouched rows, matching the
-    reference's never-read metrics)."""
+    reference's never-read metrics).  ``names`` is the fetch's resolved
+    name list, applied as an IN-set projection: no join, so checkpointing
+    the touched catalog starts no Spark job."""
     if "read_on" not in catalog.columns:
         catalog = catalog.withColumn("read_on", F.lit(None).cast("long"))
-    return _touch_column(catalog, names, now, "read_on")
+    return catalog.withColumn(
+        "read_on", F.when(F.col("name").isin(names), F.lit(now)).otherwise(F.col("read_on"))
+    )
 
 
 def _touch_column(

@@ -70,15 +70,23 @@ def find_metrics(catalog: DataFrame, pattern: str) -> DataFrame:
     return catalog.filter(glob_predicate(plan, catalog)).orderBy("name")
 
 
+def glob_metrics(
+    catalog: DataFrame, pattern: str, max_metrics: int = MAX_METRICS_PER_PATTERN
+) -> list[tuple[str, str]]:
+    """Driver-side sorted ``(name, aggregator)`` list — the resolved glob
+    every serving read is keyed on — with the reference's N+1 cap check
+    (drivers/cassandra.py:2149-2176)."""
+    rows = find_metrics(catalog, pattern).select("name", "aggregator").limit(max_metrics + 1).collect()
+    if len(rows) > max_metrics:
+        raise TooManyMetrics(f"glob {pattern!r} matched more than {max_metrics} metrics")
+    return [(r["name"], r["aggregator"]) for r in rows]
+
+
 def glob_metric_names(
     catalog: DataFrame, pattern: str, max_metrics: int = MAX_METRICS_PER_PATTERN
 ) -> list[str]:
-    """Driver-side name list with the reference's N+1 cap check
-    (drivers/cassandra.py:2149-2176)."""
-    rows = find_metrics(catalog, pattern).select("name").limit(max_metrics + 1).collect()
-    if len(rows) > max_metrics:
-        raise TooManyMetrics(f"glob {pattern!r} matched more than {max_metrics} metrics")
-    return [r["name"] for r in rows]
+    """The names of :func:`glob_metrics`."""
+    return [n for n, _ in glob_metrics(catalog, pattern, max_metrics)]
 
 
 def find_directories(catalog: DataFrame, pattern: str) -> DataFrame:

@@ -74,13 +74,13 @@ class PointStore:
         The explicit ``pday`` bounds are what lets the file source skip
         whole day directories (the reference computes per-partition SELECT
         bounds the same way, drivers/cassandra.py:1887-1919); the ``ts``
-        bounds stay for row-group pruning inside the kept days.
+        bounds stay for row-group pruning inside the kept days.  One SQL
+        string, not a Column tree: a serving read builds it per request,
+        and each Column operator is a driver-to-JVM round trip.
         """
-        return (
-            (F.col("pday") >= start // SECONDS_PER_DAY)
-            & (F.col("pday") <= (end - 1) // SECONDS_PER_DAY)
-            & (F.col("ts") >= start)
-            & (F.col("ts") < end)
+        return F.expr(
+            f"pday >= {start // SECONDS_PER_DAY} AND pday <= {(end - 1) // SECONDS_PER_DAY}"
+            f" AND ts >= {start} AND ts < {end}"
         )
 
     def fetch(self, spark: SparkSession, stage: Stage, start: int, end: int) -> DataFrame:

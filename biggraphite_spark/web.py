@@ -319,9 +319,11 @@ class GraphiteWeb:
         self._tagged_lock = threading.Lock()
         #: find-result cache: a dashboard fleet refreshing the same globs
         #: re-issues identical /metrics/find calls every few seconds; keyed
-        #: on (endpoint, hashed query, catalog identity) so a catalog swap
-        #: invalidates naturally, TTL'd so long-lived servers converge on
-        #: fresh metadata.  find_cache_ttl=0 disables.
+        #: on (endpoint, hashed query, catalog generation) so a catalog
+        #: swap invalidates naturally (a read_on touch, which renames
+        #: nothing, does not), TTL'd so long-lived servers converge on
+        #: fresh metadata.  /render's resolved leaves share it.
+        #: find_cache_ttl=0 disables.
         self.find_cache_ttl = find_cache_ttl
         self._find_cache: dict = {}
         self._find_cache_lock = threading.Lock()
@@ -346,7 +348,7 @@ class GraphiteWeb:
         key = (
             kind,
             hashlib.md5(query.encode("utf-8")).hexdigest(),
-            id(self.engine.catalog),
+            self.engine.catalog_generation,
         )
         now = time.monotonic()
         with self._find_cache_lock:
@@ -359,12 +361,17 @@ class GraphiteWeb:
             self.find_cache_stats["misses"] += 1
             if len(self._find_cache) > 1024:
                 # opportunistic sweep: expired entries and entries keyed on
-                # replaced catalog objects age out here
+                # replaced catalog generations age out here
                 self._find_cache = {
                     k: v for k, v in self._find_cache.items() if v[0] > now
                 }
             self._find_cache[key] = (now + self.find_cache_ttl, val)
         return val
+
+    def resolve(self, glob: str) -> list[tuple[str, str]]:
+        """A render leaf's glob resolved to its capped, sorted
+        ``(name, aggregator)`` list, memoized with the find results."""
+        return self._find_cached("leaf", glob, lambda: self.engine.resolve(glob))
 
     def find_nodes(self, query: str) -> list[dict]:
         """treejson: branch nodes (directories) + leaf nodes (metrics),
@@ -615,111 +622,142 @@ class GraphiteWeb:
         holds more buckets than the renderer can draw, consecutive buckets
         are consolidated by groups of ``ceil(n / max_points)`` with
         null-skipping average (render/datalib consolidate semantics) — the
-        consolidation is a Spark aggregation keyed by the widened bucket,
-        not a driver loop; the collect only ever returns <= max_points rows
-        per series.
+        consolidation is a Spark aggregation keyed by (name, widened
+        bucket), which reuses the leaf read's ``name`` exchange; the
+        collect only ever returns <= max_points rows per series.
 
-        One engine.read per target glob (each is an aligned fetch + dense
-        grid); the collect is bounded by the 5000-metric glob cap times the
-        window's bucket count — the same bound graphite-web itself renders
-        under.
+        Each target glob is resolved once (memoized with the find results)
+        to a sorted ``(name, aggregator)`` list capped at the 5000-metric
+        glob limit — a glob past it answers 400 — and read by name
+        (:meth:`Engine.read_names`).  A plain glob is read sparse and its
+        holes are filled on the driver (:func:`..operators.gapfill.fill_grid`),
+        so its plan is one scan, one exchange and no join.  A function
+        target reads its leaves dense (graphite functions see the holes as
+        nulls) and is evaluated as one Spark plan.  Rows are sorted on the
+        driver, never by a Spark sort.
         """
+        from .operators.gapfill import fill_grid
+
         out = []
         for target in targets:
-            if "(" in target:
-                # function-expression target (graphite's render grammar):
-                # parse, fetch each glob leaf through the aligned read path,
-                # evaluate the function tree as ONE Spark plan
-                from .functions import targets as T
-
-                node = T.parse_target(target)
-                # align_time_window also clamps (end <= now, start >= the
-                # stage horizon) — engine.read applies the same clamps to the
-                # fetched leaves, so recomputing with bare round_down/round_up
-                # here would overcount n_buckets and misalign the
-                # maxDataPoints consolidation grid
-                a_start, a_end, stage = self.engine.retention.align_time_window(
-                    start, end, self.engine.now
-                )
-                meta = {}
-                series_df = T.evaluate_target(
-                    node,
-                    fetch=lambda g: self.engine.read(g, start, end).series,
-                    step=stage.precision,
-                    start=a_start,
-                    end=a_end,
-                    spark=self.engine.catalog.sparkSession,
-                    tag_fetch=lambda specs: self.engine.read_names(
-                        self.find_series_by_tag(specs), start, end
-                    ).series,
-                    fetch_names=lambda names: self.engine.read_names(
-                        names, start, end
-                    ).series,
-                    meta=meta,
-                    events_fetch=(
-                        None if self.events_store is None
-                        else lambda tags: self.events_store.get_data(
-                            a_start, a_end, tags or None
-                        ).select("when")
-                    ),
-                )
-                rr = type("RR", (), {"start": a_start, "end": a_end,
-                                     "step": stage.precision})()
+            frame, fill = self.target_frame(target, start, end, max_points, info)
+            rows = frame.collect()
+            if fill is not None:
+                series = fill_grid(rows, *fill)
             else:
-                rr = self.engine.read(target, start, end)
-                series_df = rr.series
-                meta = {}
-            n_buckets = max(1, (rr.end - rr.start) // rr.step)
-            mp = max_points
-            if mp is None and n_buckets > DEFAULT_RENDER_MAX_POINTS:
-                # no maxDataPoints from the client: still bound the driver
-                # collect — a year-wide window over a 5000-series glob would
-                # otherwise serialize n_series x n_buckets rows through the
-                # driver.  graphite-web draws at image width anyway; 10k
-                # buckets per series is beyond any drawable resolution.
-                # graphite-web's format=json returns full resolution, so the
-                # implicit consolidation is SURFACED to the caller via
-                # ``info`` (the HTTP layer turns it into an
-                # X-BG-Consolidated response header) — data-export clients
-                # can detect that values were averaged.
-                mp = DEFAULT_RENDER_MAX_POINTS
-                if info is not None:
-                    info.setdefault("consolidations", []).append({
-                        "target": target,
-                        "buckets": n_buckets,
-                        "max_points": mp,
-                        "func": meta.get("consolidate", "average"),
-                    })
-            if mp and mp > 0 and n_buckets > mp:
-                factor = -(-n_buckets // mp)  # ceil
-                new_step = rr.step * factor
-                bucket = (
-                    F.lit(rr.start)
-                    + F.floor((F.col("ts") - rr.start) / new_step)
-                    * F.lit(new_step)
-                )
-                # consolidateBy/setXFilesFactor hints ride the meta channel
-                # (graphite applies them at consolidation, not at fetch)
-                from .functions.series import agg_expr
-
-                agg = agg_expr(meta.get("consolidate", "average"), order="ts")
-                xff = meta.get("xff")
-                if xff:
-                    frac = F.count("value") / F.count(F.lit(1))
-                    agg = F.when(frac >= F.lit(float(xff)), agg)
-                series_df = (
-                    series_df.groupBy("name", bucket.alias("ts"))
-                    .agg(agg.alias("value"))
-                )
-            rows = series_df.orderBy("name", "ts").collect()
-            series: dict[str, list] = {}
-            for r in rows:
-                series.setdefault(r["name"], []).append(
-                    [r["value"], int(r["ts"])]
-                )
+                series: dict[str, list] = {}
+                for name, ts, value in sorted(rows, key=lambda r: (r[0], r[1])):
+                    series.setdefault(name, []).append([value, int(ts)])
             for name in sorted(series):
                 out.append({"target": name, "datapoints": series[name]})
         return out
+
+    def target_frame(
+        self,
+        target: str,
+        start: int,
+        end: int,
+        max_points: int | None = None,
+        info: dict | None = None,
+    ) -> tuple[DataFrame, tuple | None]:
+        """One render target's lazy plan, (name, ts, value) rows at most
+        ``max_points`` per series, and, for a plain glob, the
+        ``fill_grid(rows, names, start, step, n)`` arguments that complete
+        its sparse rows (None for a function target, whose rows are
+        dense)."""
+        meta: dict = {}
+        names = None
+        if "(" in target:
+            # function-expression target (graphite's render grammar):
+            # parse, fetch each glob leaf through the aligned read path,
+            # evaluate the function tree as ONE Spark plan
+            from .functions import targets as T
+
+            node = T.parse_target(target)
+            # align_time_window also clamps (end <= now, start >= the
+            # stage horizon) — read_names applies the same clamps to the
+            # fetched leaves, so recomputing with bare round_down/round_up
+            # here would overcount n_buckets and misalign the
+            # maxDataPoints consolidation grid
+            a_start, a_end, stage = self.engine.retention.align_time_window(
+                start, end, self.engine.now
+            )
+            step = stage.precision
+            series_df = T.evaluate_target(
+                node,
+                fetch=lambda g: self.engine.read_names(
+                    self.resolve(g), start, end).series,
+                step=step,
+                start=a_start,
+                end=a_end,
+                spark=self.engine.catalog.sparkSession,
+                tag_fetch=lambda specs: self.engine.read_names(
+                    self.find_series_by_tag(specs), start, end
+                ).series,
+                fetch_names=lambda names: self.engine.read_names(
+                    names, start, end
+                ).series,
+                meta=meta,
+                events_fetch=(
+                    None if self.events_store is None
+                    else lambda tags: self.events_store.get_data(
+                        a_start, a_end, tags or None
+                    ).select("when")
+                ),
+            )
+        else:
+            metrics = self.resolve(target)
+            names = [n for n, _ in metrics]
+            rr = self.engine.read_names(metrics, start, end, dense=False)
+            series_df, a_start, a_end, step = rr.series, rr.start, rr.end, rr.step
+        n_buckets = max(1, (a_end - a_start) // step)
+        mp = max_points
+        if mp is None and n_buckets > DEFAULT_RENDER_MAX_POINTS:
+            # no maxDataPoints from the client: still bound the driver
+            # collect — a year-wide window over a 5000-series glob would
+            # otherwise serialize n_series x n_buckets rows through the
+            # driver.  graphite-web draws at image width anyway; 10k
+            # buckets per series is beyond any drawable resolution.
+            # graphite-web's format=json returns full resolution, so the
+            # implicit consolidation is SURFACED to the caller via
+            # ``info`` (the HTTP layer turns it into an
+            # X-BG-Consolidated response header) — data-export clients
+            # can detect that values were averaged.
+            mp = DEFAULT_RENDER_MAX_POINTS
+            if info is not None:
+                info.setdefault("consolidations", []).append({
+                    "target": target,
+                    "buckets": n_buckets,
+                    "max_points": mp,
+                    "func": meta.get("consolidate", "average"),
+                })
+        n = (a_end - a_start) // step
+        if mp and mp > 0 and n_buckets > mp:
+            factor = -(-n_buckets // mp)  # ceil
+            new_step = step * factor
+            bucket = (
+                F.lit(a_start)
+                + F.floor((F.col("ts") - a_start) / new_step)
+                * F.lit(new_step)
+            )
+            # consolidateBy/setXFilesFactor hints ride the meta channel
+            # (graphite applies them at consolidation, not at fetch); they
+            # only come from function targets, whose rows are dense, so
+            # count(1) is the bucket's capacity
+            from .functions.series import agg_expr
+
+            agg = agg_expr(meta.get("consolidate", "average"), order="ts")
+            xff = meta.get("xff")
+            if xff:
+                frac = F.count("value") / F.count(F.lit(1))
+                agg = F.when(frac >= F.lit(float(xff)), agg)
+            series_df = (
+                series_df.groupBy("name", bucket.alias("ts"))
+                .agg(agg.alias("value"))
+            )
+            step, n = new_step, -(-n_buckets // factor)
+        fill = None if names is None else (names, a_start, step, n)
+        return series_df.select("name", "ts", "value"), fill
 
 
 def render_raw(series: list[dict]) -> str:

@@ -178,3 +178,61 @@ def test_events_store_range_prunes_at_scan(spark, tmp_path):
     plan = _plan(store.get_data(500, 1500, ["deploy"]))
     assert "PushedFilters" in plan and "when" in plan
     assert "Join" not in plan
+
+
+def _exchanges(plan: str) -> int:
+    return len(re.findall(r"^\(\d+\) (?:Broadcast)?Exchange", plan, re.M))
+
+
+def test_fetch_points_prunes_day_partitions(spark, tmp_path):
+    # a store-backed stage carries pday: fetch_points' time slice must
+    # reach the scan as a partition filter, not only a ts row filter
+    from biggraphite_spark.model import Stage
+    from biggraphite_spark.operators.fetch import fetch_points
+    from biggraphite_spark.storage import PointStore
+
+    stage = Stage.from_string("100*3600s")
+    store = PointStore(str(tmp_path / "pts"))
+    store.write(spark.createDataFrame(
+        [("a.b", 86400 * d + 60, 1.0, 1, "average") for d in range(4)],
+        "name string, ts long, value double, count long, aggregator string"), stage)
+    metrics = spark.createDataFrame([("a.b", "average")], "name string, aggregator string")
+    df = fetch_points(store.read(spark, stage), metrics, 86400, 3 * 86400, target=stage)
+    plan = _plan(df)
+    filters = re.search(r"PartitionFilters: \[(.*)\]", plan)
+    assert filters and "pday" in filters.group(1)
+    assert sorted(r["ts"] for r in df.collect()) == [86400, 2 * 86400]
+
+
+def test_render_leaf_is_one_exchange(render_engine):
+    # a plain glob renders from one scan and ONE name exchange, no join;
+    # sumSeries adds only its own per-bucket exchange
+    from biggraphite_spark.web import GraphiteWeb
+
+    app = GraphiteWeb(render_engine)
+    now = render_engine.now
+    for window, mdp in ((3600, None), (3600, 7), (72000, None), (72000, 70)):
+        plan = _plan(app.target_frame("fx.*.*", now - window, now, mdp)[0])
+        assert _exchanges(plan) == 1 and "Join" not in plan, (window, mdp)
+        plan = _plan(app.target_frame("movingAverage(fx.*.*,4)", now - window, now, mdp)[0])
+        assert _exchanges(plan) == 1 and "Join" not in plan, (window, mdp)
+    plan = _plan(app.target_frame("sumSeries(fx.*.*)", now - 72000, now)[0])
+    assert _exchanges(plan) <= 2 and "Join" not in plan
+
+
+def test_warm_plain_render_runs_two_jobs(spark, render_engine):
+    # with the glob's resolution cached, a plain render is the exchange's
+    # map job plus the collect
+    from biggraphite_spark.web import GraphiteWeb
+
+    app = GraphiteWeb(render_engine)
+    now, sc = render_engine.now, spark.sparkContext
+    for window, mdp in ((3600, 7), (72000, 70)):
+        app.render(["fx.*.*"], now - window, now, max_points=mdp)
+        group = f"plain-render-{window}"
+        sc.setJobGroup(group, group)
+        try:
+            app.render(["fx.*.*"], now - window, now, max_points=mdp)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2

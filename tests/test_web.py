@@ -923,3 +923,19 @@ def test_find_cache_hot_cold_and_invalidation(spark):
     app2.find_nodes("bg.*")
     app2.find_nodes("bg.*")
     assert app2.find_cache_stats == {"hits": 0, "misses": 0}
+
+
+def test_find_cache_survives_read_on_touch(spark):
+    """A sampled read_on touch swaps the catalog DataFrame but renames
+    nothing, so cached find results stay valid: the next find is a hit."""
+    from biggraphite_spark.cli import build_engine
+    from biggraphite_spark.sources.events import NOW
+    from biggraphite_spark.web import GraphiteWeb
+
+    app = GraphiteWeb(build_engine(spark, SF))
+    first = app.find_nodes("bg.*")
+    before = app.engine.catalog
+    app.engine.fetch("bg.click.u*", NOW - 86400, NOW)  # fetch 0 touches
+    assert app.engine.catalog is not before
+    assert app.find_nodes("bg.*") == first
+    assert app.find_cache_stats == {"hits": 1, "misses": 1}
