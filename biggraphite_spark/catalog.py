@@ -68,7 +68,16 @@ def create_metrics(
         "depth",
         "parent",
     )
-    return catalog.unionByName(fresh, allowMissingColumns=True)
+    out = catalog.unionByName(fresh, allowMissingColumns=True)
+    # a union's partitions are the sum of its sides': coalesce back to the
+    # catalog's own width, so a catalog grown by many small creates (each
+    # checkpointed, as an ingest stream's is) keeps it.  Counting the
+    # partitions of an adaptive plan (one that still shuffles, or reads an
+    # unbuilt cache) would run it here, so such a catalog is left as it is.
+    if catalog._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return out
+    width = catalog.rdd.getNumPartitions()
+    return out.coalesce(width) if width else out
 
 
 def update_metrics_metadata(

@@ -90,7 +90,13 @@ def glob_metric_names(
 
 
 def find_directories(catalog: DataFrame, pattern: str) -> DataFrame:
-    """Directory (branch-node) listing under a glob.
+    """Sorted directory (branch-node) listing under a glob: the
+    :func:`directory_candidates` relation ordered by ``directory``."""
+    return directory_candidates(catalog, pattern).orderBy("directory")
+
+
+def directory_candidates(catalog: DataFrame, pattern: str) -> DataFrame:
+    """Directory (branch-node) listing under a glob, unordered.
 
     The reference materializes a directories table (CASSANDRA_DESIGN.md:
     108-112); ES derives them from name prefixes (elasticsearch.py:587-629),
@@ -105,6 +111,9 @@ def find_directories(catalog: DataFrame, pattern: str) -> DataFrame:
     are ≤ MAX_GLOB_COMPONENTS deep) followed by one distinct, so the
     candidate relation stays a small multiple of the catalog before the
     authoritative regex filter prunes it.
+
+    Serving callers collect it and sort the few directories on the driver,
+    which spares the range sort's sampling job.
     """
     if pattern == "":
         return catalog.limit(0).select(F.col("name").alias("directory"))
@@ -120,7 +129,7 @@ def find_directories(catalog: DataFrame, pattern: str) -> DataFrame:
             .select(prefix.alias("directory"))
             .distinct()
         )
-        return cand.filter(F.col("directory").rlike(rx)).orderBy("directory")
+        return cand.filter(F.col("directory").rlike(rx))
     # globstar: a matching directory has at least depth_min+1 components
     # (the fixed components must all be present); depth >= n_min also keeps
     # the sequence() ascending — proper prefixes only
@@ -132,4 +141,4 @@ def find_directories(catalog: DataFrame, pattern: str) -> DataFrame:
         .select(F.explode(prefixes).alias("directory"))
         .distinct()
     )
-    return cand.filter(F.col("directory").rlike(rx)).orderBy("directory")
+    return cand.filter(F.col("directory").rlike(rx))

@@ -10,8 +10,14 @@ Design mapping:
   the reference, CASSANDRA_DESIGN.md:49-54, becomes per-stage retention
   expiry here);
 - `(metric, time_start_ms)` partition keys + offset clustering
-  (drivers/cassandra.py:740-782) -> `pday` directory pruning + Parquet
-  row-group min/max on (name, ts); `time_filter` reproduces the reference's
+  (drivers/cassandra.py:740-782) -> `pday` directory pruning + name-clustered
+  day files: every writer sorts each day's rows by (name, ts)
+  (:meth:`PointStore._write_days`), so a metric's points sit in a run of
+  consecutive Parquet pages and a ``name IN (...)``/``ts`` read skips the
+  other metrics' pages by the page index (per-page column min/max, which
+  Spark's vectorized reader applies by default).  A small day file is a
+  single row group, so row-group min/max alone would prune nothing inside
+  it.  `time_filter` reproduces the reference's
   `_fetch_points_make_selects` arithmetic as a partition-pruning predicate;
 - TTL (duration + out-of-order margin, drivers/cassandra.py:943-1019) ->
   `expire()` dropping whole day partitions — the cheap partition-drop
@@ -53,14 +59,26 @@ class PointStore:
     def write(self, df: DataFrame, stage: Stage, mode: str = "overwrite") -> None:
         """Persist a stage DataFrame (name, ts, value[, count, aggregator]).
 
-        One write task per (pday) partition; append mode is what the
-        streaming foreachBatch sink uses.
+        Append mode is what the streaming foreachBatch sink uses.
         """
+        self._write_days(
+            df.withColumn("pday", pday_col(F.col("ts")).cast("int")),
+            self.stage_path(stage),
+            mode,
+        )
+
+    @staticmethod
+    def _write_days(df: DataFrame, path: str, mode: str) -> None:
+        """The one stage-tree writer: ``df`` (carrying ``pday``) written
+        day-partitioned, each file's rows sorted by (name, ts) — the
+        clustering the page-index skipping of name-keyed reads relies on.
+        A local sort, no shuffle: the partitioned writer needs its input
+        sorted by ``pday`` anyway, and (pday, name, ts) satisfies that."""
         (
-            df.withColumn("pday", pday_col(F.col("ts")).cast("int"))
+            df.sortWithinPartitions("pday", "name", "ts")
             .write.partitionBy("pday")
             .mode(mode)
-            .parquet(self.stage_path(stage))
+            .parquet(path)
         )
 
     # -- read --------------------------------------------------------------
@@ -198,10 +216,13 @@ class PointStore:
 
         Scale shape: only the selected (default: all present) day partitions
         are read and rewritten — one (name, ts)-keyed exchange scoped to
-        those days, not the whole store.  The swap is a per-``pday``
-        directory rename via a side tree (Spark refuses to overwrite a path
-        it is reading), so a crash mid-compact leaves each day either fully
-        old or fully new, never mixed.  Returns the rewritten day numbers.
+        those days, not the whole store.  The rewrite goes through
+        :meth:`_write_days`, so compaction also re-clusters days written
+        unsorted (before the writers sorted by (name, ts)).  The swap is a
+        per-``pday`` directory rename via a side tree (Spark refuses to
+        overwrite a path it is reading), so a crash mid-compact leaves each
+        day either fully old or fully new, never mixed.  Returns the
+        rewritten day numbers.
         """
         path = self.stage_path(stage)
         df = self.read(spark, stage)
@@ -224,7 +245,7 @@ class PointStore:
         )
         tmp = path + "_compacting"
         shutil.rmtree(tmp, ignore_errors=True)
-        resolved.write.partitionBy("pday").mode("overwrite").parquet(tmp)
+        self._write_days(resolved, tmp, "overwrite")
         for day in target:
             new_dir = os.path.join(tmp, f"pday={day}")
             if not os.path.isdir(new_dir):  # day emptied (shouldn't happen)
@@ -247,7 +268,7 @@ class PointStore:
         path = self.stage_path(stage)
         tmp = path + suffix
         shutil.rmtree(tmp, ignore_errors=True)
-        result.write.partitionBy("pday").mode("overwrite").parquet(tmp)
+        self._write_days(result, tmp, "overwrite")
         os.makedirs(path, exist_ok=True)
         for day in days:
             new_dir = os.path.join(tmp, f"pday={day}")
@@ -277,8 +298,10 @@ class PointStore:
         range that can contribute to the dirty coarse buckets (a coarse
         bucket starting in day D consumes fine rows up to D + precision), so
         cost is proportional to the dirtied data, not the store; one
-        (name, aggregator, bucket)-keyed exchange for the re-aggregation;
-        per-day directory swap as in :meth:`compact`.
+        exchange for the re-aggregation (a ``name``-keyed one when the
+        last-write-wins fold runs: both it and the rollup key on ``name``,
+        so one repartition serves both); per-day directory swap as in
+        :meth:`compact`.
         """
         from .operators.downsample import bucket_col, rollup_partials
 
@@ -306,7 +329,8 @@ class PointStore:
             # dirtied data.
             w = Window.partitionBy("name", "ts").orderBy(F.desc("epoch"))
             contributing = (
-                contributing.withColumn("_rn", F.row_number().over(w))
+                contributing.repartition("name")
+                .withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn", "epoch")
             )

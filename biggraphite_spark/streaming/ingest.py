@@ -87,11 +87,18 @@ def fan_out_sink(*writers):
     """MultiDatabase-style fan-out (SURVEY §2.7 U4, plugins/carbon.py:372-456:
     the whisper+biggraphite double-write): one foreachBatch callback that
     hands each micro-batch to every registered writer.  The batch DataFrame
-    is persisted across writers so the upstream aggregation runs once."""
+    is persisted across writers so the upstream aggregation runs once.
+
+    An empty batch reaches no writer.  Update mode runs a no-data batch
+    after every watermark advance; its one ``count()`` still executes the
+    stateful stage (so the state commits) and costs one job instead of
+    every writer's."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.persist()
         try:
+            if batch_df.count() == 0:
+                return
             for w in writers:
                 w(batch_df, epoch_id)
         finally:

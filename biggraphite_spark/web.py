@@ -379,12 +379,7 @@ class GraphiteWeb:
         return self._find_cached("find", query, lambda: self._find_nodes(query))
 
     def _find_nodes(self, query: str) -> list[dict]:
-        from .operators.find import find_directories
-
-        branches = [
-            r["directory"]
-            for r in find_directories(self.engine.catalog, query).collect()
-        ]
+        branches = self._directories(query)
         leaves = self.engine.glob_names(query)
         out = []
         for path in branches:
@@ -409,13 +404,18 @@ class GraphiteWeb:
         return self._find_cached("expand", query, lambda: self._expand(query))
 
     def _expand(self, query: str) -> dict:
-        from .operators.find import find_directories
-
-        branches = [
-            r["directory"]
-            for r in find_directories(self.engine.catalog, query).collect()
-        ]
+        branches = self._directories(query)
         return {"results": sorted(set(branches) | set(self.engine.glob_names(query)))}
+
+    def _directories(self, query: str) -> list[str]:
+        """The glob's directories, sorted on the driver: a find lists few,
+        and a Spark range sort would cost a sampling job and a shuffle."""
+        from .operators.find import directory_candidates
+
+        return sorted(
+            r["directory"]
+            for r in directory_candidates(self.engine.catalog, query).collect()
+        )
 
     # -- /tags write half (requires a TagStore) -----------------------------
     def _store(self):

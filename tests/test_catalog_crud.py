@@ -51,6 +51,28 @@ def test_existing_names_not_overwritten(spark, catalog):
     assert created.count() == catalog.count()
 
 
+def test_repeated_creates_keep_catalog_width(spark, catalog):
+    # an ingest stream creates a few metrics per batch and checkpoints the
+    # catalog: it must not gain a partition per create
+    grown = catalog.localCheckpoint()
+    width = grown.rdd.getNumPartitions()
+    for i in range(5):
+        names = spark.createDataFrame([(f"new.batch{i}.m{j}",) for j in range(3)], "name string")
+        grown = create_metrics(grown, names, META, now=1000 + i).localCheckpoint()
+        assert grown.rdd.getNumPartitions() == width
+    assert grown.count() == catalog.count() + 15
+    # creating over an uncheckpointed create (its plan still shuffles)
+    # stays lazy: no job runs until the catalog is used
+    sc = spark.sparkContext
+    sc.setJobGroup("lazy-create", "lazy-create")
+    try:
+        chained = create_metrics(create_metrics(grown, names, META, now=1), names, META, now=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("lazy-create") == []
+    assert chained.count() == grown.count()
+
+
 def test_update_metadata_by_glob(catalog):
     updated = update_metrics_metadata(
         catalog, "bg.error.*", now=99999, aggregator="maximum", xfilesfactor=0.9

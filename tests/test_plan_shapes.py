@@ -236,3 +236,24 @@ def test_warm_plain_render_runs_two_jobs(spark, render_engine):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_cold_find_runs_three_jobs(spark, render_engine):
+    # an uncached /metrics/find: the directory distinct (map job + collect)
+    # and the leaf glob; the directories are sorted on the driver
+    from biggraphite_spark.operators.find import find_directories
+    from biggraphite_spark.web import GraphiteWeb
+
+    app = GraphiteWeb(render_engine, find_cache_ttl=0)
+    sc = spark.sparkContext
+    for query in ("fx.*", "fx.*.*", "fx.{max,avg}.*", "fx.**"):
+        group = f"cold-find-{query}"
+        sc.setJobGroup(group, group)
+        try:
+            nodes = app.find_nodes(query)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3, query
+        branches = [r["directory"] for r in find_directories(render_engine.catalog, query).collect()]
+        assert [n["id"] for n in nodes] == branches + render_engine.glob_names(query)
+        assert [n["leaf"] for n in nodes] == [0] * len(branches) + [1] * (len(nodes) - len(branches))

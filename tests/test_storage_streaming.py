@@ -191,6 +191,54 @@ def test_fan_out_sink_writes_all_sinks(spark, tmpdir):
     assert b.read(spark, STAGE1).count() == 2
 
 
+def test_fan_out_sink_skips_empty_batches(spark, tmpdir):
+    """An empty micro-batch reaches no writer; the no-data batch update
+    mode runs after a watermark advance is skipped that way, and its state
+    still commits, so the next data batch aggregates onto the first."""
+    from biggraphite_spark.streaming.ingest import fan_out_sink, generic_partials
+
+    seen = []
+    sink = fan_out_sink(lambda df, e: seen.append(e), lambda df, e: seen.append(e))
+    sink(spark.createDataFrame([], "name string, ts long, value double"), 0)
+    assert seen == []
+
+    src = os.path.join(tmpdir, "in")
+    os.makedirs(src)
+    rows = {}
+
+    def collect(df, epoch):
+        seen.append(epoch)
+        rows.update({(r["name"], r["ts"]): (r["sum"], r["count"]) for r in df.collect()})
+
+    def land(name, lines):
+        # written beside the source and renamed in, so the stream never
+        # lists a half-written file
+        tmp = os.path.join(tmpdir, name)
+        with open(tmp, "w") as fh:
+            fh.write("".join(f"{ts},{v}\n" for ts, v in lines))
+        os.rename(tmp, os.path.join(src, name))
+
+    stream = spark.readStream.schema("ts long, value double").csv(src)
+    points = stream.select(F.lit("m").alias("name"), F.col("ts").cast("timestamp").alias("ts"), "value")
+    query = (
+        generic_partials(points, STAGE1).writeStream.outputMode("update")
+        .foreachBatch(fan_out_sink(collect))
+        .option("checkpointLocation", os.path.join(tmpdir, "ckpt"))
+        .start()
+    )
+    try:
+        land("a.csv", [(7200, 1.0), (7260, 2.0)])
+        query.processAllAvailable()
+        land("b.csv", [(7320, 3.0)])
+        query.processAllAvailable()
+        batches = {p.batchId for p in query.recentProgress}
+    finally:
+        query.stop()
+    assert rows == {("m", 7200): (6.0, 3)}
+    # the watermark advance after a.csv ran a no-data batch no writer saw
+    assert len(seen) == 2 and len(batches) > len(seen)
+
+
 def test_multimodal_feature_pipeline(spark):
     from biggraphite_spark.operators.multimodal import (
         decode_image,
